@@ -12,9 +12,13 @@ import org.apache.spark.sql.Dataset
   * pipeline (reference `phenoxtract/src/pipeline.rs:36-85`,
   * `transform/transform_module.rs:26-43`).
   *
-  * Strategies see ALL tables at once (cross-table DOB maps); the
-  * preprocess/strategy stages are lazy column rewrites — nothing
-  * materializes until the single groupByKey shuffle in `collect`.
+  * Strategies see ALL tables at once (cross-table DOB maps). The
+  * preprocess/strategy stages rewrite columns lazily, but they are not
+  * action-free: preprocessing runs small type-election aggregates per
+  * table, and each validating strategy runs one eager check
+  * (`Strategy.failOnOffenders`, plus the DOB-map collect of DateToAge
+  * and the pivot-id collect of MultiHpoColExpansion). The packets
+  * themselves materialize in the single groupByKey shuffle in `collect`.
   */
 final case class Pipeline(
     strategies: Seq[Strategy],

@@ -17,14 +17,18 @@ import org.apache.spark.sql.types._
   */
 object Casts {
 
-  /** P1: trim every string; whitespace-only / empty becomes null.
-    * JAVA trim (all chars <= U+0020), NOT Spark's `trim`, which strips
-    * only ASCII space: a cell containing "\t" must become null, and
-    * "2020-01-01\t" must lose its tab before the date-format cascade
-    * (the reference's Rust `str::trim` strips whitespace generally).
+  /** `String.trim` as a column expression: strips every char <= U+0020.
+    * Spark's `trim` strips only the space character, so a tab/CR-padded
+    * cell (routine in TSV-derived data) would keep its padding and miss
+    * keys the driver built with Java's trim (alias maps, synonym maps,
+    * ontology dictionaries) or block the date-format cascade.
     */
+  def javaTrim(c: Column): Column =
+    regexp_replace(c, "^[\\x00-\\x20]+|[\\x00-\\x20]+$", "")
+
+  /** P1: trim every string; whitespace-only / empty becomes null. */
   def trimEmptyToNull(c: Column): Column = {
-    val t = regexp_replace(c, "^[\\x00-\\x20]+|[\\x00-\\x20]+$", "")
+    val t = javaTrim(c)
     when(t === lit(""), lit(null).cast(StringType)).otherwise(t)
   }
 
@@ -97,20 +101,6 @@ object Casts {
         d.cast(LongType)))
   }
 
-  /** Would casting `name` with `caster` lose any non-null value?
-    * Column-level guard — one agg action. `requireValues` distinguishes
-    * the INFERENCE use (an all-null column must not "win" the first
-    * candidate type) from the SPECIFIC-cast use (an all-null or empty
-    * column casts to anything, as in the reference).
-    */
-  private def lossless(df: DataFrame, name: String, casted: Column,
-      requireValues: Boolean): Boolean = {
-    val row = df.agg(
-      count(col(name)).as("before"),
-      count(casted).as("after")).head()
-    row.getLong(0) == row.getLong(1) && (!requireValues || row.getLong(0) > 0)
-  }
-
   private def candidateCasts(c: Column): Seq[(DataType, Column)] = Seq(
     BooleanType   -> toBoolStrict(c),
     LongType      -> toLongViaDouble(c),
@@ -147,27 +137,6 @@ object Casts {
       }
       n -> winner.getOrElse((StringType: DataType, col(n)))
     }.toMap
-  }
-
-  /** P4: specific cast — requested dtype or error listing every value
-    * that failed to cast (reference `casting.rs:48-89`).
-    */
-  def specific(df: DataFrame, name: String, target: DataType): DataFrame = {
-    val casted = target match {
-      case BooleanType   => toBoolStrict(col(name))
-      case LongType      => toLongViaDouble(col(name))
-      case DateType      => toDateMulti(col(name))
-      case TimestampType => toTimestampMulti(col(name))
-      case t             => col(name).try_cast(t)
-    }
-    if (!lossless(df, name, casted, requireValues = false)) {
-      val bad = df.filter(col(name).isNotNull && casted.isNull)
-        .select(col(name)).distinct().limit(20)
-        .collect().map(_.get(0)).mkString(", ")
-      throw new IllegalArgumentException(
-        s"CastingError: column '$name' has values not castable to $target: $bad")
-    }
-    df.withColumn(name, casted)
   }
 
   /** ONE owner of the whole-number-and-in-long-range violation

@@ -1,8 +1,9 @@
 package graft.strategy
 
 import graft.model._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** T4 — convert every date-typed time column into an ISO-8601 age
   * relative to the patient's date of birth, then rewrite the data
@@ -33,54 +34,51 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
   protected def internalTransform(tables: Seq[Cdf]): Seq[Cdf] = {
     val dobMap = buildDobMap(tables)
 
-    tables.map { cdf =>
-      val targets = dateCols(cdf)
-      if (targets.isEmpty) cdf
-      else {
+    // Every table with date columns, left-joined to its patients' DOBs.
+    val joined = tables.map { cdf =>
+      val targets = dateCols(cdf).map(_._1)
+      Option.when(targets.nonEmpty) {
         val subject = cdf.subjectIdColumn
         // collision-proof temp name (the HpoDiseaseSplitter fresh()
         // defense): a fact table legitimately named __dob must pass
         // through unharmed, not die on AMBIGUOUS_REFERENCE
         val dob = Iterator.from(0).map(i => if (i == 0) "__dob" else s"__dob$i")
           .find(n => !cdf.df.columns.contains(n)).get
-        val joined = cdf.df.join(
+        (targets, dob, cdf.df.join(
           broadcast(dobMap
             .withColumnRenamed("__subject", subject)
             .withColumnRenamed("__dob", dob)),
-          Seq(subject), "left")
+          Seq(subject), "left"))
+      }
+    }
 
-        // ONE validation aggregate for all three error classes over all
-        // date columns (was three full scans): negative ages, strict
-        // orphans, and unparseable non-null dates — the reference
-        // accumulates the parse failure into its error set regardless
-        // of strict (`date_to_age.rs:184-187`); silently nulling the
-        // onset would erase it from the packet.
-        val checks = targets.zipWithIndex.flatMap { case ((c, _), i) =>
-          Seq(
-            count(when(toDate(col(c)) < col(dob), 1)).as(s"__neg_$i"),
-            count(when(toDate(col(c)).isNotNull && col(dob).isNull, 1)).as(s"__orph_$i"),
-            count(when(col(dob).isNotNull && col(c).isNotNull &&
-              toDate(col(c)).isNull, 1)).as(s"__bad_$i"))
-        }
-        val row = joined.agg(checks.head, checks.tail: _*).head()
-        def flagged(offset: Int): Seq[String] = targets.map(_._1).zipWithIndex.collect {
-          case (c, i) if row.getLong(3 * i + offset) > 0 => c
-        }
-        val negCols = flagged(0)
-        if (negCols.nonEmpty)
-          throw MappingException(name, negCols,
-            "column(s) contain dates before the patient's date of birth")
-        val badCols = flagged(2)
-        if (badCols.nonEmpty)
-          throw MappingException(name, badCols,
-            "column(s) contain unparseable date values")
-        if (strict) {
-          val bad = flagged(1)
-          if (bad.nonEmpty)
-            throw MappingException(name, bad,
-              "column(s) contain dates for patients with no date of birth")
-        }
+    // ONE check over all tables for all three error classes, naming the
+    // offending columns: negative ages, unparseable non-null dates (the
+    // reference accumulates the parse failure regardless of strict,
+    // `date_to_age.rs:184-187` — silently nulling the onset would erase
+    // it from the packet) and, when strict, dates of patients with no DOB.
+    Strategy.failOnOffenders(name, joined.flatten.map { case (targets, dob, df) =>
+      // the multi-format parse runs once per column, in this projection
+      val dated = df.select(col(dob).as("__dob") +: targets.indices.flatMap(i => Seq(
+        col(targets(i)).isNotNull.as(s"__given$i"), toDate(df, targets(i)).as(s"__date$i"))): _*)
+      val dobKnown = col("__dob").isNotNull
+      val checks = targets.indices.flatMap { i =>
+        val date = col(s"__date$i")
+        def flag(cond: Column, hint: String) =
+          when(cond, struct(lit(targets(i)).as("v"), lit(hint).as("hint")))
+        Seq(
+          flag(date < col("__dob"), "column(s) contain dates before the patient's date of birth"),
+          flag(dobKnown && col(s"__given$i") && date.isNull,
+            "column(s) contain unparseable date values")) ++
+          Option.when(strict)(flag(date.isNotNull && !dobKnown,
+            "column(s) contain dates for patients with no date of birth"))
+      }
+      dated.select(explode(array(checks: _*)).as("o")).filter(col("o").isNotNull).select("o.*")
+    })
 
+    tables.zip(joined).map {
+      case (cdf, None) => cdf
+      case (cdf, Some((targets, dob, df))) =>
         // Native CalendarAgeIso, not the calendarDiff+toIso8601 column
         // algebra: the algebraic form re-inlines the multi-format date
         // parse into every diff component and blew past janino's method
@@ -89,9 +87,9 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
         // reference returns AnyValue::String(date) there,
         // `date_to_age.rs:177-179`) — nulling it would silently erase
         // the observation's time information.
-        val converted = targets.foldLeft(joined) { case (acc, (c, _)) =>
+        val converted = targets.foldLeft(df) { (acc, c) =>
           val age = graft.functions.GraftExtensions.calendar_age_iso(
-            col(dob), toDate(col(c)))
+            col(dob), toDate(df, c))
           acc.withColumn(c,
             if (strict) age
             else when(col(dob).isNull, col(c).cast("string")).otherwise(age))
@@ -104,15 +102,19 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
           else sc
         }
         Cdf(cdf.context.copy(seriesContexts = newSeries), converted)
-      }
     }
   }
 
   /** Dates may arrive as DateType/TimestampType (preprocessor-cast) or
-    * as strings in one of the supported formats.
+    * as strings in one of the supported formats. Only the latter are
+    * parsed: re-parsing a preprocessor-cast column would inline its
+    * multi-format parse twice and push the generated code past janino's
+    * 64 KB method limit (the stage then falls back to interpreted eval).
     */
-  private def toDate(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    coalesce(c.try_cast("date"), graft.clean.Casts.toDateMulti(c.cast("string")))
+  private def toDate(df: DataFrame, c: String): Column = df.schema(c).dataType match {
+    case DateType | TimestampType => col(c).cast(DateType)
+    case _ => coalesce(col(c).try_cast("date"), graft.clean.Casts.toDateMulti(col(c).cast("string")))
+  }
 
   /** One row per patient: `__subject`, `__dob` (DateType). Conflicting
     * DOBs for one patient → error with the offending subject ids.
@@ -131,7 +133,7 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
       dobCol <- cdf.columnsOfKind(ContextKind.KDateOfBirth)
     } yield cdf.df
       .select(col(cdf.subjectIdColumn).cast("string").as("__subject"),
-        toDate(col(dobCol)).as("__dob"))
+        toDate(cdf.df, dobCol).as("__dob"))
       .filter(col("__dob").isNotNull)
     require(pieces.nonEmpty, s"strategy $name: no DateOfBirth column found")
 
@@ -143,20 +145,15 @@ final case class DateToAgeStrategy(strict: Boolean = true) extends Strategy {
       .agg(collect_set(col("__dob").cast("string")).as("__dobs"))
     val rows = agg.collect()
     val conflicted = rows.filter(_.getSeq[String](1).size > 1)
-      .map(_.getString(0)).take(20)
+      .map(_.getString(0)).take(Strategy.MaxReported)
     if (conflicted.nonEmpty)
       throw MappingException(name, conflicted.toSeq,
         "patient(s) with more than one distinct date of birth")
     val spark = tables.head.df.sparkSession
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(
-      rows.toSeq.map(r => org.apache.spark.sql.Row(
-        r.getString(0), r.getSeq[String](1).head)).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__subject",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("__dob_s",
-          org.apache.spark.sql.types.StringType))))
+      rows.toSeq.map(r => Row(r.getString(0), r.getSeq[String](1).head)).asJava,
+      StructType(Seq(StructField("__subject", StringType), StructField("__dob_s", StringType))))
       .select(col("__subject"), col("__dob_s").cast("date").as("__dob"))
   }
 }

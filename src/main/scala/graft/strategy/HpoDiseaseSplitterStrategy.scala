@@ -44,11 +44,8 @@ final case class HpoDiseaseSplitterStrategy(
     * CURIEs consult only the id map, everything else only the
     * label/synonym maps, so the flag participates in the join equality.
     *
-    * Trim is JAVA trim (all chars ≤ U+0020 — the rule `BiDict` keys
-    * were built with), NOT Spark's `trim`, which strips only the space
-    * character: a tab/CR-padded cell (routine in TSV-derived data)
-    * would otherwise miss the join and abort the pipeline as an
-    * unknown value. Lowercase is `lower_root` (`functions/LowerRoot`),
+    * Trim is Java trim, the rule `BiDict` keys were built with.
+    * Lowercase is `lower_root` (`functions/LowerRoot`),
     * NOT Spark's `lower`: Spark's slow path lowercases non-ASCII
     * strings with the JVM DEFAULT locale, which on a tr/az/lt host
     * diverges from the `Locale.ROOT` keys `BiDict.norm` builds on the
@@ -56,8 +53,7 @@ final case class HpoDiseaseSplitterStrategy(
     * aborting on values the dictionary knows.
     */
   private def lookupKey(c: Column): (Column, Column) = {
-    val v = regexp_replace(c.cast("string"),
-      "^[\\x00-\\x20]+|[\\x00-\\x20]+$", "")
+    val v = graft.clean.Casts.javaTrim(c.cast("string"))
     val isCurie = v.rlike("^[A-Za-z][A-Za-z0-9_.]*:\\S+$")
     (when(isCurie, v).otherwise(graft.functions.GraftExtensions.lower_root(v)),
       isCurie)
@@ -87,23 +83,21 @@ final case class HpoDiseaseSplitterStrategy(
         diseaseKeys.toSeq.map { case (k, cu) => (k, cu, "disease") }
     val terms = broadcast(termRows.toDF("t_key", "t_curie", "t_cls"))
 
-    // Accumulate-then-fail over unknown values: anti-join shape (left
-    // join + null filter) per column, capped at 50 distinct offenders.
-    // The select projects exactly (v, __gk, __gc) — user columns are
-    // gone before the join, so no name in `terms` can collide here.
-    val bad = tables.flatMap { cdf =>
-      cdf.columnsOfKind(ContextKind.KHpoOrDisease).flatMap { c =>
-        val (k, cu) = lookupKey(col(c))
-        cdf.df.select(col(c).cast("string").as("v"), k.as("__gk"), cu.as("__gc"))
-          .filter($"v".isNotNull)
-          .join(terms, $"__gk" === $"t_key" && $"__gc" === $"t_curie", "left")
-          .filter($"t_cls".isNull)
-          .select("v").distinct().limit(50)
-          .collect().map(_.getString(0))
-      }
-    }.distinct
-    if (bad.nonEmpty)
-      throw MappingException(name, bad, "values in neither the HPO nor the disease ontology")
+    // Fail once on unknown values: anti-join shape (left join + null
+    // filter) per column. The select projects exactly (v, __gk, __gc,
+    // hint) — user columns are gone before the join, so no name in
+    // `terms` can collide here.
+    Strategy.failOnOffenders(name, for {
+      cdf <- tables
+      c <- cdf.columnsOfKind(ContextKind.KHpoOrDisease)
+    } yield {
+      val (k, cu) = lookupKey(col(c))
+      cdf.df.select(col(c).cast("string").as("v"), k.as("__gk"), cu.as("__gc"),
+          lit("values in neither the HPO nor the disease ontology").as("hint"))
+        .filter($"v".isNotNull)
+        .join(terms, $"__gk" === $"t_key" && $"__gc" === $"t_curie", "left")
+        .filter($"t_cls".isNull)
+    })
 
     tables.map { cdf =>
       val targets = cdf.bindings.filter(_._2.dataContext.kind == ContextKind.KHpoOrDisease)

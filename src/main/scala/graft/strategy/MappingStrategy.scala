@@ -16,9 +16,6 @@ import org.apache.spark.sql.functions._
   * Spark's `lower`, whose non-ASCII slow path uses each executor's JVM
   * default locale): on a cluster with heterogeneous or tr/az/lt
   * locales the two would otherwise disagree on keys containing 'I'.
-  *
-  * The unmapped scan is a distinct-collect per matching column — a
-  * second cheap pass over one column, not a per-row throw.
   */
 final case class MappingStrategy(
     name: String,
@@ -29,29 +26,20 @@ final case class MappingStrategy(
     synonymMap.map { case (k, v) =>
       k.trim.toLowerCase(java.util.Locale.ROOT) -> v }
 
-  /** Executor-side twin of the driver key normalization above: JAVA
-    * trim (all chars ≤ U+0020 — what `String.trim` strips), not
-    * Spark's space-only `trim`, so a tab/CR-padded cell maps instead
-    * of aborting; ROOT lowercase via `lower_root`.
+  /** Executor-side twin of the driver key normalization above: Java
+    * trim, then ROOT lowercase via `lower_root`.
     */
   private def probeKey(c: org.apache.spark.sql.Column) =
-    graft.functions.GraftExtensions.lower_root(
-      regexp_replace(c.cast("string"), "^[\\x00-\\x20]+|[\\x00-\\x20]+$", ""))
+    graft.functions.GraftExtensions.lower_root(graft.clean.Casts.javaTrim(c.cast("string")))
 
   protected def internalTransform(tables: Seq[Cdf]): Seq[Cdf] = {
-    // Pass 1: accumulate every unmapped distinct value across tables.
-    val bad = tables.flatMap { cdf =>
-      cdf.columnsOfKind(targetKind).flatMap { c =>
-        cdf.df
-          .select(probeKey(col(c)).as("v"))
-          .filter(col("v").isNotNull && !col("v").isin(norm.keys.toSeq: _*))
-          .distinct().limit(50)
-          .collect().map(_.getString(0))
-      }
-    }.distinct
-    if (bad.nonEmpty)
-      throw MappingException(name, bad,
-        hint = s"known keys: ${norm.keys.toSeq.sorted.mkString(", ")}")
+    // Pass 1: fail once on every unmapped value across tables.
+    val hint = s"known keys: ${norm.keys.toSeq.sorted.mkString(", ")}"
+    Strategy.failOnOffenders(name, for {
+      cdf <- tables
+      c <- cdf.columnsOfKind(targetKind)
+    } yield cdf.df.select(probeKey(col(c)).as("v"), lit(hint).as("hint"))
+        .filter(col("v").isNotNull && !col("v").isin(norm.keys.toSeq: _*)))
 
     // Pass 2: apply the when-chain mapping.
     tables.map { cdf =>

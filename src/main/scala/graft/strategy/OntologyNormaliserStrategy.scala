@@ -33,17 +33,13 @@ final case class OntologyNormaliserStrategy(
       else bc.value.resolve(v).map(_._1.id).orNull
     }
 
-    // Pass 1: accumulate unresolvable values across all tables.
-    val bad = tables.flatMap { cdf =>
-      cdf.columnsWhere(sc => targetKinds.contains(sc.dataContext.kind)).flatMap { c =>
-        cdf.df.select(col(c).cast("string").as("v"))
-          .filter(col("v").isNotNull && resolveId(col("v")).isNull)
-          .distinct().limit(50)
-          .collect().map(_.getString(0))
-      }
-    }.distinct
-    if (bad.nonEmpty)
-      throw MappingException(name, bad, "terms not found in the ontology library")
+    // Pass 1: fail once on every unresolvable value across tables.
+    Strategy.failOnOffenders(name, for {
+      cdf <- tables
+      c <- cdf.columnsWhere(sc => targetKinds.contains(sc.dataContext.kind))
+    } yield cdf.df
+      .select(col(c).cast("string").as("v"), lit("terms not found in the ontology library").as("hint"))
+        .filter(col("v").isNotNull && resolveId(col("v")).isNull))
 
     // Pass 2: rewrite to CURIEs.
     tables.map { cdf =>

@@ -76,12 +76,6 @@ class CastsSpec extends SparkSpec {
     assert(out.toSeq == Seq(Some(true), Some(false), None, None))
   }
 
-  test("specific cast errors with the offending values (P4)") {
-    val df = Seq("1", "x", "2").toDF("c")
-    val e = intercept[IllegalArgumentException](Casts.specific(df, "c", LongType))
-    assert(e.getMessage.contains("x"))
-  }
-
   test("allWholeNumbers guard (P2)") {
     assert(Casts.allWholeNumbers(Seq(1.0, 2.0).toDF("c"), "c"))
     assert(!Casts.allWholeNumbers(Seq(1.0, 2.5).toDF("c"), "c"))

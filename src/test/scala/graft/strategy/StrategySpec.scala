@@ -26,6 +26,20 @@ class StrategySpec extends SparkSpec {
     assert(rows.toSeq == Seq(Some(true), Some(false), None))
   }
 
+  test("T1: non-castable alias values in two tables fail once, naming both (P4)") {
+    // the strict specific cast (P4, reference casting.rs:48-89): a value
+    // non-null before the cast and null after it is an offender
+    def table(name: String, column: String, value: String) = cdf(name,
+      Seq(("P1", "1"), ("P2", value)).toDF("subject_id", column),
+      SeriesContext(Identifier.Single(column),
+        aliasMap = Some(AliasMap(Map("none" -> Some("0")), OutputDataType.I64))))
+    val e = intercept[MappingException] {
+      AliasMapStrategy.transform(Seq(table("a", "count_a", "x"), table("b", "count_b", "lots")))
+    }
+    assert(e.badValues.toSet == Set("x", "lots"))
+    assert(e.getMessage.contains("not castable to bigint"))
+  }
+
   // --- T2 mapping -----------------------------------------------------
   test("T2: lower/trim-keyed mapping; unmapped values accumulate and fail once") {
     val df = Seq(("P1", " MALE "), ("P2", "f"), ("P3", "Woman")).toDF("subject_id", "sex")
@@ -138,6 +152,22 @@ class StrategySpec extends SparkSpec {
       cdf("o", onset2, SeriesContext(Identifier.Single("onset"), dataContext = Context.Onset(TimeKind.Date)))))
     val got = out(1).df.orderBy("subject_id").collect().map(_.getString(1)).toSeq
     assert(got == Seq("P8Y3M10D", "2001-06-29"))
+  }
+
+  test("T4: error classes of different tables fail once, naming every column") {
+    val dob = Seq(("P1", "1990-01-15")).toDF("subject_id", "dob")
+    val early = Seq(("P1", "1980-01-01")).toDF("subject_id", "onset")
+    val garbled = Seq(("P1", "2020/13/45")).toDF("subject_id", "resolved")
+    val e = intercept[MappingException] {
+      DateToAgeStrategy().transform(Seq(
+        cdf("d", dob, SeriesContext(Identifier.Single("dob"), dataContext = Context.DateOfBirth)),
+        cdf("o", early, SeriesContext(Identifier.Single("onset"), dataContext = Context.Onset(TimeKind.Date))),
+        cdf("r", garbled, SeriesContext(Identifier.Single("resolved"),
+          dataContext = Context.TimeOfResolution(TimeKind.Date)))))
+    }
+    assert(e.badValues.toSet == Set("onset", "resolved"))
+    assert(e.getMessage.contains("before the patient's date of birth"))
+    assert(e.getMessage.contains("unparseable"))
   }
 
   test("T4: a user column named __dob passes through unharmed") {
@@ -282,5 +312,67 @@ class StrategySpec extends SparkSpec {
         SeriesContext(Identifier.Single("x"), dataContext = Context.HpoOrDisease)))).head
       assert(out.df.select("x_hpo").head().getString(0) == "BEHÇET IRITIS")
     } finally java.util.Locale.setDefault(prev)
+  }
+
+  // --- accumulate-then-fail: one validation action per strategy -------
+  /** Number of Spark SQL actions `body` runs. Listener events arrive
+    * asynchronously but in order, so a trailing marker action tells when
+    * every earlier one has been delivered.
+    */
+  private def actionsDuring(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val marker = "actions-during-marker"
+    val actions = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def seen(qe: QueryExecution): Unit =
+        if (qe.logical.toString.contains(marker)) markerSeen.countDown()
+        else actions.incrementAndGet()
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = seen(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(org.apache.spark.sql.functions.lit(marker)).collect()
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      actions.get
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("one validation action per strategy over 3 tables x 2 target columns") {
+    import graft.ontology._
+    val lib = BiDictLibrary(Seq(
+      BiDict.fromEntries(
+        Resource("hp", "HPO", "http://purl.obolibrary.org/obo/hp.owl", "v1", "HP", "http://purl.obolibrary.org/obo/HP_"),
+        Seq(("HP:0001945", "Fever", Seq()))),
+      BiDict.fromEntries(
+        Resource("mondo", "MONDO", "http://purl.obolibrary.org/obo/mondo.owl", "v1", "MONDO", "http://purl.obolibrary.org/obo/MONDO_"),
+        Seq(("MONDO:0005737", "Ebola", Seq())))))
+    def tables(value: String, dataContext: Context, aliasMap: Option[AliasMap] = None) =
+      (1 to 3).map { t =>
+        cdf(s"t$t", Seq((s"P$t", value, value)).toDF("subject_id", "a", "b"),
+          Seq("a", "b").map(c => SeriesContext(Identifier.Single(c),
+            dataContext = dataContext, aliasMap = aliasMap)): _*)
+      }
+    val cases = Seq(
+      MappingStrategy.defaultSex -> tables("male", Context.SubjectSex),
+      AgeToIso8601Strategy() -> tables("45", Context.Onset(TimeKind.Age)),
+      OntologyNormaliserStrategy(lib) -> tables("Fever", Context.Hpo),
+      HpoDiseaseSplitterStrategy(lib) -> tables("Ebola", Context.HpoOrDisease),
+      AliasMapStrategy -> tables("yes", Context.VitalStatus,
+        Some(AliasMap(Map("yes" -> Some("true")), OutputDataType.Bool))))
+    for ((strategy, input) <- cases)
+      assert(actionsDuring(strategy.transform(input)) == 1, strategy.name)
+
+    // DateToAge also collects its DOB map: two actions, however many tables
+    val dated = (1 to 3).map { t =>
+      cdf(s"t$t", Seq((s"P$t", "1990-01-15", "2001-01-01", "2002-02-02"))
+          .toDF("subject_id", "dob", "a", "b"),
+        SeriesContext(Identifier.Single("dob"), dataContext = Context.DateOfBirth) +:
+          Seq("a", "b").map(c => SeriesContext(Identifier.Single(c),
+            dataContext = Context.Onset(TimeKind.Date))): _*)
+    }
+    assert(actionsDuring(DateToAgeStrategy().transform(dated)) == 2, "date_to_age")
   }
 }
